@@ -27,4 +27,8 @@ object GraftSession {
       // + Tables.events normalizes to micros
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
+      // file: without a chmod/readlink child process per file op
+      // (graft/io/LocalFs.scala)
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.io.NioLocalFs].getName)
 }
